@@ -1,13 +1,43 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /**
  * Driver benchmark main: one JSON line of per-query wall-times at
  * SPARK_GRAFT_SF_DIR. The one-time synthetic model build + scored-DAG
  * materialization is warmed BEFORE the timed loop and reported as its
  * own `model_build` entry, so per-query numbers measure the query, not
  * whichever p_* entry happens to run first (round-1 verdict item).
+ * A query that throws is listed under `"failed"`, never timed or summed
+ * into `total`, and makes the exit code non-zero once every other query
+ * has run.
  */
 object Bench {
+
+  /** Best-of-2 wall time per query (same-code totals spread ±30% with
+   *  page cache/GC state; the warm minimum narrows that to ~1.1-1.2×,
+   *  VERDICT r4), and the sorted names of the queries that threw. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+                                 queries: Map[String, (SparkSession, String) => DataFrame])
+      : (Map[String, Double], Seq[String]) = {
+    val runs = queries.map { case (name, fn) =>
+      def once() = attempt(name)(seconds(fn(spark, sfDir).count()))
+      name -> once().flatMap(a => once().map(math.min(a, _)))
+    }
+    (runs.collect { case (n, Some(s)) => n -> s }, runs.collect { case (n, None) => n }.toSeq.sorted)
+  }
+
+  /** `body`, or None once the reason it threw is logged. */
+  private[graft] def attempt[T](name: String)(body: => T): Option[T] =
+    try Some(body)
+    catch { case e: Throwable => System.err.println(s"[graft] $name failed: ${e.getMessage}"); None }
+
+  private def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -18,9 +48,7 @@ object Bench {
 
     // Warm the shared synthetic model and its cached derived stages
     // (gated spots, scored DAG) once, timed separately.
-    val tm = System.nanoTime()
-    SparkEntry.scored(spark).count()
-    val modelBuild = (System.nanoTime() - tm) / 1e9
+    val modelBuild = seconds(SparkEntry.scored(spark).count())
 
     // Warm the sf-dir parquet footers so the first t_/r_ query doesn't
     // pay one-time file-listing/schema-inference costs either.
@@ -32,23 +60,11 @@ object Bench {
     // Shared IVF codebook trained outside the timed loop, as its own
     // entry — otherwise whichever IVF-family query runs first absorbs
     // ~3 s of k-means training into a 500-row assignment query's number.
-    val ti = System.nanoTime()
-    try TextOpsQueries.warmIvfCodebook(spark, sfDir) catch { case _: Throwable => () }
-    val ivfTrain = (System.nanoTime() - ti) / 1e9
+    val ivfTrain = attempt("ivf_train")(seconds(TextOpsQueries.warmIvfCodebook(spark, sfDir)))
 
-    // Best-of-2 per query: same-code totals on this box spread ±30%
-    // (page cache/GC state), which blinded cross-round per-query diffs
-    // below ~1.5×; the warm minimum is the comparable number and shrinks
-    // the observed band to ~1.1-1.2× (VERDICT r4). One-time costs
-    // (model build, IVF training) are measured once, separately, above.
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> math.min(once(), once())
-    } + ("model_build" -> modelBuild) + ("ivf_train" -> ivfTrain)
+    val (timed, queryFailed) = timeQueries(spark, sfDir, SparkEntry.queries)
+    val results = timed ++ ivfTrain.map("ivf_train" -> _) + ("model_build" -> modelBuild)
+    val failed = (queryFailed ++ ivfTrain.fold(Seq("ivf_train"))(_ => Nil)).sorted
     // Timings rounded to 3 decimals: at 76+ queries a full-double-precision
     // line overran the driver's tail-capture window in round 2
     // (BENCH_r02 parsed: null) — ~1.5 KB rounded fits any plausible window.
@@ -60,8 +76,9 @@ object Bench {
     // ~2.9 KB and overran the driver's ~3 KB tail-capture window in BOTH
     // rounds 2 and 3 (BENCH_r0{2,3} parsed: null). The stdout line must be
     // tiny enough that no plausible tail window can clip its head.
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), full)
     catch { case _: Throwable => () }
     // Compact summary (~220 bytes) for the driver's tail parser. It keeps
@@ -70,10 +87,11 @@ object Bench {
     val top3 = results.toSeq.sortBy(-_._2).take(3)
       .map { case (k, v) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$top3,"sf":"$sfDir","n_queries":${results.size},"queries_file":"bench.json"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$top3,"sf":"$sfDir","n_queries":${results.size},"failed":$failedJson,"queries_file":"bench.json"}"""
     spark.stop()
     // The JSON line is the ABSOLUTE last stdout line (after spark.stop so
     // no shutdown logging can land behind it in the driver's tail window).
     println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -37,7 +37,7 @@ object EvalMain {
     gold.count()
 
     val t0 = System.nanoTime()
-    val scored = Annotate.scored(spark, m).cache()
+    val scored = Annotate.scoredOn(spark, m, m.paragraphs).cache()
     val nSpots = scored.select("url", "para_idx", "offset").distinct().count()
     val annotateSec = (System.nanoTime() - t0) / 1e9
     val nParas = m.paragraphs.count()
@@ -47,10 +47,8 @@ object EvalMain {
     val dm = graft.eval.Evaluator.disambiguation(gold, scored)
 
     // prior-only baseline over the same gated spots
-    val bc = spark.sparkContext.broadcast(
-      graft.spot.Spotter.buildAutomaton(m.surfaceForms))
     val gated = graft.spot.Spotter.gatedSpots(
-      graft.spot.Spotter.spots(m.paragraphs, bc), m.surfaceForms)
+      graft.spot.Spotter.spots(m.paragraphs, m.automaton), m.surfaceForms)
     val baseline = graft.disambig.Disambiguator.baseline(
       graft.disambig.Disambiguator.spotCandidates(gated, m.surfaceForms, m.candidates),
       m.resources)

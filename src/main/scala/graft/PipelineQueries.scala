@@ -25,9 +25,8 @@ object PipelineQueries {
     * `p_overlap_resolved` see the same rows. */
   private def overlapInput(s: SparkSession): DataFrame = {
     val mm = m(s)
-    val bc = s.sparkContext.broadcast(graft.spot.Spotter.buildAutomaton(mm.surfaceForms))
     graft.spot.Spotter.gatedSpots(
-      graft.spot.Spotter.allSpots(mm.paragraphs, bc), mm.surfaceForms)
+      graft.spot.Spotter.allSpots(mm.paragraphs, mm.automaton), mm.surfaceForms)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -45,11 +45,8 @@ object ScalingBench {
     try {
       val t0 = System.nanoTime()
       val m = Annotate.syntheticModel(spark, nDocs)
-      // one scored DAG, shared by annotations and triples — calling the
-      // model-taking overloads here would rebuild the automaton (a new
-      // broadcast closure, so not cache-equal) and run the whole
-      // spot+score stage twice inside the timed window
-      val scored = Annotate.scored(spark, m).cache()
+      // one scored DAG, shared by annotations and triples
+      val scored = Annotate.scoredOn(spark, m, m.paragraphs).cache()
       val ann = Annotate.annotationsFrom(spark, scored).cache()
       val nAnn = ann.count()
       val nTriples = graft.triples.Triples
@@ -57,11 +54,7 @@ object ScalingBench {
       val secs = (System.nanoTime() - t0) / 1e9
       val c = Counters(
         m.paragraphs.count(), m.occurrences.count(),
-        {
-          val bc = spark.sparkContext.broadcast(
-            graft.spot.Spotter.buildAutomaton(m.surfaceForms))
-          graft.spot.Spotter.spots(m.paragraphs, bc).count()
-        },
+        graft.spot.Spotter.spots(m.paragraphs, m.automaton).count(),
         nAnn, nTriples)
       (secs, c)
     } finally spark.stop()

@@ -42,7 +42,7 @@ object ScalingProbe {
     t("entity_contexts")(m.entityContexts.count())
 
     val scored = t("scored_plan+exec")(
-      { val s = Annotate.scored(spark, m).cache(); s.count(); s })
+      { val s = Annotate.scoredOn(spark, m, m.paragraphs).cache(); s.count(); s })
     t("annotations")(Annotate.annotationsFrom(spark, scored).toDF().cache().count())
     t("triples")(Annotate.triplesFrom(spark, m, scored).count())
     spark.stop()

@@ -21,7 +21,9 @@ object SparkEntry {
   /** Flagship query; driver smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
     val m = Annotate.syntheticModel(spark, nDocs = 30, withTotalCounts = false)
-    Annotate.triples(spark, m).toDF()
+    graft.triples.Triples.all(
+      Annotate.annotationsFrom(spark, Annotate.scoredOn(spark, m, m.paragraphs)),
+      m.resources, m.closure).toDF()
   }
 
   // Lazily built shared model per (session, size) so each query entry
@@ -51,8 +53,7 @@ object SparkEntry {
   private[graft] def rawSpots(spark: SparkSession): DataFrame = synchronized {
     val m = model(spark)
     cachedRaw.getOrElse {
-      val bc = spark.sparkContext.broadcast(graft.spot.Spotter.buildAutomaton(m.surfaceForms))
-      val r = graft.spot.Spotter.spots(m.paragraphs, bc).toDF().cache()
+      val r = graft.spot.Spotter.spots(m.paragraphs, m.automaton).toDF().cache()
       cachedRaw = Some(r)
       r
     }
@@ -73,7 +74,7 @@ object SparkEntry {
   private[graft] def scored(spark: SparkSession): DataFrame = synchronized {
     val m = model(spark)
     cachedScored.getOrElse {
-      val s = Annotate.scoredFromGated(spark, m, gated(spark)).cache()
+      val s = Annotate.scoredFromGated(spark, m, m.paragraphs, gated(spark)).cache()
       cachedScored = Some(s)
       s
     }

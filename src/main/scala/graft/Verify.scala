@@ -7,6 +7,16 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
+  /** Write each query's result to `<outDir>/<name>.parquet`; returns the
+    * sorted names of the queries that threw, which `main` lists under
+    * `"failed"` on its last stdout line before exiting non-zero. */
+  private[graft] def writeQueries(spark: SparkSession, sfDir: String, outDir: String,
+                                  queries: Map[String, (SparkSession, String) => DataFrame])
+      : Seq[String] =
+    queries.toSeq.collect { case (name, fn) if Bench.attempt(name) {
+      sanitize(fn(spark, sfDir)).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+    }.isEmpty => name }.sorted
+
   /** The driver's pandas compare sorts every column; array/map/struct/
     * binary columns are unhashable there (numpy.ndarray TypeError) and
     * would crash the whole harness row. Flatten them to deterministic
@@ -32,13 +42,7 @@ object Verify {
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try sanitize(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = writeQueries(spark, sfDir, outDir, SparkEntry.queries)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -65,5 +69,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"""{"queries":${SparkEntry.queries.size},"failed":${failed.map(q).mkString("[", ",", "]")}}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.extract.Extractor
@@ -8,8 +9,9 @@ import graft.modelbuild.ModelBuild
 import graft.disambig.Disambiguator
 import graft.filter.AnnotationFilters
 import graft.sources.{NTriples, SyntheticCorpus}
-import graft.spot.Spotter
+import graft.spot.{AhoCorasick, Spotter}
 import graft.triples.Triples
+import graft.util.TextUtil.{IdentityStemmer, Stemmer}
 
 /**
  * End-to-end facade: model build over a web_pages corpus, then the
@@ -34,75 +36,124 @@ final case class Model(
     // tokenization must use the same one or token ids won't line up
     // (reference threads one Stemmer from CreateSpotlightModel through
     // both index build and request tokenization, :223-224)
-    stemmer: graft.util.TextUtil.Stemmer = graft.util.TextUtil.IdentityStemmer)
+    stemmer: Stemmer = IdentityStemmer) {
+
+  /** The spotting dictionary: one automaton over the gated surface forms,
+   *  built and broadcast on first use and shared by every annotate call
+   *  against this model (batch, eval and streaming micro-batches). */
+  lazy val automaton: Broadcast[AhoCorasick] =
+    surfaceForms.sparkSession.sparkContext.broadcast(Spotter.buildAutomaton(surfaceForms))
+}
 
 object Annotate {
 
-  /** Build all model tables from a corpus + graph dumps. Caches the dims
-   *  (they are re-used by several downstream joins). */
+  /** How the model-build DAG holds a table: `hold(stage, eager)(compute)`
+   *  returns the held table. `eager` marks a table whose inputs the DAG
+   *  drops next, so it must be materialized when `hold` returns. */
+  private[graft] type Hold = (String, Boolean) => (=> DataFrame) => DataFrame
+
+  /** Cache each table; materialize eager ones with a `count()`. */
+  private[graft] val inMemory: Hold = (_, eager) => compute => {
+    val df = compute.cache()
+    if (eager) df.count()
+    df
+  }
+
+  /** Build all model tables from a corpus + graph dumps, cached in memory. */
   def buildModel(spark: SparkSession,
                  pages: Dataset[WebPage],
                  redirectsNt: Seq[String],
                  disambiguationsNt: Seq[String],
                  instanceTypesNt: Seq[String],
                  withTotalCounts: Boolean = true,
-                 stemmer: graft.util.TextUtil.Stemmer = graft.util.TextUtil.IdentityStemmer): Model = {
-    import spark.implicits._
-    val ns = "http://dbpedia.org/resource/"
+                 stemmer: Stemmer = IdentityStemmer): Model =
+    modelDag(spark, pages, redirectsNt, disambiguationsNt, instanceTypesNt,
+      withTotalCounts, stemmer, inMemory)._1
 
-    val redirects = NTriples.stripNamespace(NTriples.fromStrings(spark, redirectsNt), ns)
-    val disambigs = NTriples.stripNamespace(NTriples.fromStrings(spark, disambiguationsNt), ns)
-    val instanceTypes = NTriples.stripNamespace(NTriples.fromStrings(spark, instanceTypesNt), ns)
+  /**
+   * The model-build DAG, defined once for both [[buildModel]] (tables
+   * cached in memory) and [[Runner.run]] (tables committed as stages).
+   * Each table is held through `hold` under its stage name, in this order:
+   *
+   *   paragraphs, occurrences  <- web_pages
+   *   redirect_closure         <- redirects
+   *   resolved_occurrences     <- occurrences, redirect_closure, disambiguations
+   *   surface_forms            <- occurrences (+ raw totals spotted in paragraphs)
+   *   resources                <- resolved_occurrences, instance types
+   *   candidates               <- resolved_occurrences, surface_forms, resources
+   *   token_types              <- paragraphs, surface_forms
+   *   entity_contexts          <- resolved_occurrences, resources, token_types
+   *
+   * Returns the model and the resolved occurrences (the gold the Runner
+   * trains its similarity thresholds on).
+   */
+  private[graft] def modelDag(spark: SparkSession,
+                              pages: Dataset[WebPage],
+                              redirectsNt: Seq[String],
+                              disambiguationsNt: Seq[String],
+                              instanceTypesNt: Seq[String],
+                              withTotalCounts: Boolean,
+                              stemmer: Stemmer,
+                              hold: Hold): (Model, DataFrame) = {
+    import spark.implicits._
+    def held[T: Encoder](stage: String, eager: Boolean = false)(ds: => Dataset[T]) =
+      hold(stage, eager)(ds.toDF()).as[T]
+    def nt(lines: Seq[String]) =
+      NTriples.stripNamespace(NTriples.fromStrings(spark, lines), "http://dbpedia.org/resource/")
+    val instanceTypes = nt(instanceTypesNt)
       .withColumn("obj", regexp_replace(
         regexp_replace(col("obj"), "http://dbpedia.org/ontology/", "DBpedia:"),
         "http://schema.org/", "Schema:"))
 
     // pages feeds both the text-extraction path and the link-occurrence
-    // path; cache so the (expensive) markup parse isn't run twice
-    pages.cache()
-    val extracted = Extractor.extracted(pages)
-    val paragraphs = Extractor.paragraphs(extracted).cache()
-    val occurrences = Extractor.occurrences(pages).cache()
-    // Materialize both parsed dependents, then drop the raw-HTML cache:
+    // path; cache so the (expensive) markup parse isn't run twice, then
+    // drop the raw-HTML cache once both parsed dependents are held:
     // repeated model builds in one long-lived session must not accumulate
     // cached page bytes (they are never read again past this point).
-    paragraphs.count(); occurrences.count()
+    pages.cache()
+    val paragraphs = held("paragraphs", eager = true)(Extractor.paragraphs(Extractor.extracted(pages)))
+    val occurrences = held("occurrences", eager = true)(Extractor.occurrences(pages))
     pages.unpersist()
 
-    val closure = ModelBuild.redirectClosure(redirects).cache()
-    val resolved = ModelBuild.resolvedOccurrences(occurrences, closure, disambigs).cache()
+    val closure = hold("redirect_closure", false)(ModelBuild.redirectClosure(nt(redirectsNt)))
+    val resolved = hold("resolved_occurrences", false) {
+      ModelBuild.resolvedOccurrences(occurrences, closure, nt(disambiguationsNt))
+    }
 
-    // first pass without raw totals (needed to build the full dictionary)
-    val sfsAnnotatedOnly = ModelBuild.surfaceForms(occurrences, None)
-    val sfs = (if (withTotalCounts) {
-      val fullDict = Spotter.buildAutomaton(sfsAnnotatedOnly, minAnnotationProbability = 0.0)
-      val bc = spark.sparkContext.broadcast(fullDict)
-      val tc = Spotter.totalCounts(paragraphs, bc)
-      // A7: longest-annotation correction — annotated occurrences of a
-      // longer sf also raw-matched its sub-ngrams; remove that inflation
-      // so annotationProbability isn't deflated for nested forms
-      // (reference: MemoryStoreIndexer.scala:69-109). The pre-correction
-      // table is cached: the correction self-joins it, and without the
-      // cache each side would re-run the whole totalCounts spotting chain.
-      val sfsWithTotals = ModelBuild.surfaceForms(occurrences, Some(tc)).cache()
-      val corrected = ModelBuild.ngramTotalCorrection(sfsWithTotals).cache()
-      // materialize the corrected table, then drop the intermediate:
-      // repeated model builds in one long-lived session must not
-      // accumulate cached pre-correction sf tables
-      corrected.count()
-      sfsWithTotals.unpersist()
-      corrected
-    } else sfsAnnotatedOnly.cache())
+    var preCorrection: Option[DataFrame] = None
+    val surfaceForms = held("surface_forms", eager = withTotalCounts) {
+      // first pass without raw totals (needed to build the full dictionary)
+      val firstPass = ModelBuild.surfaceForms(occurrences, None)
+      if (!withTotalCounts) firstPass
+      else {
+        val bc = spark.sparkContext.broadcast(
+          Spotter.buildAutomaton(firstPass, minAnnotationProbability = 0.0))
+        // A7: longest-annotation correction — annotated occurrences of a
+        // longer sf also raw-matched its sub-ngrams; remove that inflation
+        // so annotationProbability isn't deflated for nested forms
+        // (reference: MemoryStoreIndexer.scala:69-109). The pre-correction
+        // table is cached: the correction self-joins it, and without the
+        // cache each side would re-run the whole totalCounts spotting chain.
+        val withTotals = ModelBuild.surfaceForms(
+          occurrences, Some(Spotter.totalCounts(paragraphs, bc))).cache()
+        preCorrection = Some(withTotals.toDF())
+        ModelBuild.ngramTotalCorrection(withTotals)
+      }
+    }
+    // the corrected table is materialized: drop the intermediate, so
+    // repeated model builds in one long-lived session don't accumulate
+    // cached pre-correction sf tables
+    preCorrection.foreach(_.unpersist())
 
-    val resources = ModelBuild.resources(resolved, instanceTypes).cache()
-    val candidates = ModelBuild.candidates(resolved, sfs, resources).cache()
-    val tokenTypes = ModelBuild.tokenTypes(paragraphs, sfs, stemmer).cache()
-    val entityContexts = ModelBuild.entityContexts(resolved, resources, tokenTypes,
-      stem = stemmer).cache()
-    val totals = ModelBuild.totals(sfs, resources, tokenTypes)
+    val resources = held("resources")(ModelBuild.resources(resolved, instanceTypes))
+    val candidates = held("candidates")(ModelBuild.candidates(resolved, surfaceForms, resources))
+    val tokenTypes = held("token_types")(ModelBuild.tokenTypes(paragraphs, surfaceForms, stemmer))
+    val entityContexts = held("entity_contexts")(
+      ModelBuild.entityContexts(resolved, resources, tokenTypes, stem = stemmer))
+    val totals = ModelBuild.totals(surfaceForms, resources, tokenTypes)
 
-    Model(paragraphs, occurrences, closure, sfs, resources, candidates,
-      tokenTypes, entityContexts, totals, stemmer)
+    (Model(paragraphs, occurrences, closure, surfaceForms, resources, candidates,
+      tokenTypes, entityContexts, totals, stemmer), resolved)
   }
 
   /**
@@ -136,51 +187,35 @@ object Annotate {
    */
   val MaxContextTokens = 250
 
-  /** The annotate path over the model's own paragraphs (or any other
-   *  paragraph set): spots → candidates → scored, MAX_CONTEXT-capped. */
-  def scored(spark: SparkSession, m: Model,
-             cfg: Disambiguator.Config = Disambiguator.Config(),
-             maxContextTokens: Int = MaxContextTokens): DataFrame = {
-    val bc = spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms))
-    val raw = Spotter.spots(m.paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows)
-    scoredFromGated(spark, m, Spotter.gatedSpots(raw, m.surfaceForms), cfg, maxContextTokens)
-  }
-
-  /** The served-request path: annotate an ARBITRARY paragraph set against
-   *  a built model (the reference's SpotlightInterface.annotate on posted
-   *  text, rest/.../SpotlightInterface.java:120-160 — spot, gate,
-   *  candidates, score — but batched over a Dataset instead of one
-   *  request at a time). Used by the gold-corpus eval path; annotations
-   *  come back under the caller's own (url, para_idx, offset) keys. */
+  /** The served-request path: annotate a paragraph set — the model's
+   *  own (`m.paragraphs`) or any other — against a built model (the
+   *  reference's SpotlightInterface.annotate on posted text,
+   *  rest/.../SpotlightInterface.java:120-160 — spot, gate, candidates,
+   *  score — but batched over a Dataset instead of one request at a
+   *  time), MAX_CONTEXT-capped. Spots with the model's own automaton;
+   *  annotations come back under the caller's own (url, para_idx,
+   *  offset) keys. */
   def scoredOn(spark: SparkSession, m: Model, paragraphs: Dataset[ParagraphRow],
                cfg: Disambiguator.Config = Disambiguator.Config(),
-               automaton: Option[org.apache.spark.broadcast.Broadcast[graft.spot.AhoCorasick]] = None,
-               maxContextTokens: Int = MaxContextTokens)
-      : DataFrame = {
-    // callers annotating repeatedly (streaming micro-batches) pass the
-    // prebuilt broadcast so the driver-side automaton build runs once
-    val bc = automaton.getOrElse(
-      spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms)))
+               maxContextTokens: Int = MaxContextTokens): DataFrame = {
     val gated = Spotter.gatedSpots(
-      Spotter.spots(paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows),
+      Spotter.spots(paragraphs, m.automaton, maxContextTokens, cfg.sentenceAlignedWindows),
       m.surfaceForms)
-    val spotCands = Disambiguator.spotCandidates(gated, m.surfaceForms, m.candidates, cfg)
-    val docTokens = Disambiguator.docTokenHistogram(paragraphs, m.tokenTypes,
-      m.stemmer, maxContextTokens, cfg.sentenceAlignedWindows)
-    Disambiguator.scored(spotCands, docTokens, m.entityContexts, m.resources, m.totals, cfg)
+    scoredFromGated(spark, m, paragraphs, gated, cfg, maxContextTokens)
   }
 
-  /** Same, from an already-computed (possibly cached) gated-spots table —
-   *  avoids rebuilding/broadcasting the automaton and re-running the
-   *  spot stage when the caller holds it. The gated spots must carry the
-   *  `win` column produced by [[Spotter.spots]] with the SAME
-   *  maxContextTokens AND the same `cfg.sentenceAlignedWindows` placement
-   *  (both default to [[MaxContextTokens]] / token-aligned). */
-  def scoredFromGated(spark: SparkSession, m: Model, gated: DataFrame,
+  /** Same, from an already-computed (possibly cached) gated-spots table
+   *  over `paragraphs` — skips the spot stage when the caller holds it.
+   *  The gated spots must carry the `win` column produced by
+   *  [[Spotter.spots]] with the SAME maxContextTokens AND the same
+   *  `cfg.sentenceAlignedWindows` placement (both default to
+   *  [[MaxContextTokens]] / token-aligned). */
+  def scoredFromGated(spark: SparkSession, m: Model, paragraphs: Dataset[ParagraphRow],
+                      gated: DataFrame,
                       cfg: Disambiguator.Config = Disambiguator.Config(),
                       maxContextTokens: Int = MaxContextTokens): DataFrame = {
     val spotCands = Disambiguator.spotCandidates(gated, m.surfaceForms, m.candidates, cfg)
-    val docTokens = Disambiguator.docTokenHistogram(m.paragraphs, m.tokenTypes,
+    val docTokens = Disambiguator.docTokenHistogram(paragraphs, m.tokenTypes,
       m.stemmer, maxContextTokens, cfg.sentenceAlignedWindows)
     Disambiguator.scored(spotCands, docTokens, m.entityContexts, m.resources, m.totals, cfg)
   }
@@ -195,15 +230,6 @@ object Annotate {
     val best = Disambiguator.best(scoredDf).as[AnnotationRow]
     AnnotationFilters.standardChain(best, conf, minSupport, simThresholds)
   }
-
-  /** Filtered best-per-spot annotations (server defaults). */
-  def annotations(spark: SparkSession, m: Model,
-                  conf: Double = 0.1, minSupport: Long = 10): Dataset[AnnotationRow] =
-    annotationsFrom(spark, scored(spark, m), conf, minSupport)
-
-  /** Full output graph. */
-  def triples(spark: SparkSession, m: Model): Dataset[TripleRow] =
-    Triples.all(annotations(spark, m), m.resources, m.closure)
 
   /** Full output graph from a cached scored DataFrame. */
   def triplesFrom(spark: SparkSession, m: Model, scoredDf: DataFrame): Dataset[TripleRow] =

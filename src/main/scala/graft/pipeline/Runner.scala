@@ -1,12 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.model._
-import graft.extract.Extractor
-import graft.modelbuild.ModelBuild
-import graft.sources.NTriples
-import graft.spot.Spotter
 import graft.triples.Triples
 
 /**
@@ -18,15 +13,51 @@ import graft.triples.Triples
  * deterministic (stable IDs, seeded corpus, pure extract), so a resumed
  * run is row-identical to an uninterrupted one (`RunnerSpec`).
  *
- * Stage graph:
- *   web_pages ─┬─> paragraphs ──────────────┬─> token_types
- *              └─> occurrences ─ closure ──> resolved ─> {surface_forms,
- *                  resources, candidates, entity_contexts} ─> scored
- *                  ─> annotations ─> triples (partitioned by pred)
+ * The model stages are [[Annotate.modelDag]] — the same DAG
+ * [[Annotate.buildModel]] caches in memory — held by [[staged]]; the
+ * Runner adds the annotate stages after them:
+ *
+ *   paragraphs .. entity_contexts  the model-build DAG (stage graph there)
+ *   sim_thresholds                 <- scored model paragraphs, resolved_occurrences
+ *   annotations                    <- scored model paragraphs, sim_thresholds
+ *   triples                        <- annotations, resources, redirect_closure
  */
 object Runner {
 
   final case class Result(model: Model, triples: DataFrame, root: String)
+
+  /** The model tables additionally written sorted + bucketed, with their key. */
+  private val BucketKeys = Map("candidates" -> "sf_id", "entity_contexts" -> "res_id")
+
+  /**
+   * Hold each model table as the committed stage `<root>/<stage>`, read
+   * back and cached. SURVEY §4(2): candidates and entity_contexts are
+   * also written sorted+bucketed so every annotate run joins them
+   * without re-shuffling the model side; the bucketed read replaces the
+   * stage table. The bucketed table is rewritten only when its stage was
+   * recomputed or the catalog lacks it (a resume in a fresh process), so
+   * resume stays idempotent; in the second case its old warehouse
+   * directory is stale and is cleared first (else LOCATION_ALREADY_EXISTS).
+   */
+  private[graft] def staged(spark: SparkSession, root: String, buckets: Int): Annotate.Hold =
+    (name, _) => compute => {
+      val dir = s"$root/$name"
+      val wasCommitted = Pipeline.isCommitted(dir)
+      val df = Pipeline.stage(spark, dir)(compute)
+      BucketKeys.get(name).fold(df) { key =>
+        val table = Pipeline.bucketedTableName(root, name)
+        val inCatalog = spark.catalog.tableExists(table)
+        if (!wasCommitted || !inCatalog) {
+          if (!inCatalog) {
+            val db = spark.catalog.getDatabase(spark.catalog.currentDatabase)
+            val loc = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(db.locationUri), table)
+            loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+          }
+          Pipeline.writeBucketed(df, table, key, buckets)
+        }
+        spark.table(table)
+      }.cache()
+    }
 
   def run(spark: SparkSession,
           pages: org.apache.spark.sql.Dataset[WebPage],
@@ -36,111 +67,33 @@ object Runner {
           root: String,
           buckets: Int = 32): Result = {
     import spark.implicits._
-    val ns = "http://dbpedia.org/resource/"
     def st(name: String)(f: => DataFrame): DataFrame =
       Pipeline.stage(spark, s"$root/$name")(f)
-    // SURVEY §4(2): the two big model tables are additionally written
-    // sorted+bucketed (candidates by sf_id, entity_contexts by res_id) so
-    // every subsequent annotate run joins them without re-shuffling the
-    // model side — the bucketed read replaces the plain stage table in
-    // the returned Model. Rewritten only when the stage itself was
-    // recomputed (or the table is missing), so resume stays idempotent.
-    def bucketed(stage: String, df: DataFrame, key: String,
-                 wasCommitted: Boolean): DataFrame = {
-      val table = Pipeline.bucketedTableName(root, stage)
-      if (!wasCommitted || !spark.catalog.tableExists(table))
-        Pipeline.writeBucketed(df, table, key, buckets)
-      spark.table(table)
-    }
 
-    // Reliable checkpoints live under the stage root THIS run owns:
-    // denseIds (and anything else that cuts lineage) then survives
-    // executor loss instead of depending on executor-local blocks. Set
-    // per run — a dir pinned to an earlier run's root (the previous
-    // first-run-wins guard) would write this run's recovery data under
-    // a root with a different lifetime. The checkpoints are scoped to
-    // the run: every stage re-reads its own parquet (Pipeline.stage),
-    // so once the last stage commits nothing references them and the
-    // dir is deleted below — Spark never cleans reliable-checkpoint
-    // files unless the GC-driven cleanCheckpoints flag is on, and
-    // leaking a dictionary-sized copy per run is exactly the disk
-    // shape a resumable pipeline must not have. No restore of a prior
-    // dir afterwards: getCheckpointDir returns the UUID subdir Spark
-    // generated and setCheckpointDir eagerly mkdirs its argument, so
-    // "restoring" would recreate the dir just deleted (and nest a UUID
-    // per run). The session's checkpoint dir therefore stays pointed
-    // under the LAST run's root; Spark lazily recreates the path if a
-    // later lineage cut checkpoints before the next run re-points it.
+    // Reliable checkpoints (denseIds' lineage cuts) live under the root
+    // THIS run owns, set per run, so they survive executor loss and share
+    // the run's lifetime. Every stage re-reads its own parquet, so once
+    // the last stage commits nothing references them and the dir is
+    // deleted below (Spark cleans checkpoint files only with
+    // cleanCheckpoints on). No restore of a prior dir afterwards:
+    // setCheckpointDir eagerly mkdirs its argument, so restoring would
+    // recreate the dir just deleted; the session's dir stays under the
+    // LAST run's root.
     spark.sparkContext.setCheckpointDir(s"$root/_checkpoints")
 
-    // pages feeds both the extraction and occurrence stages on a cold
-    // run; cache so the markup parse doesn't execute twice
-    pages.cache()
-    val redirects = NTriples.stripNamespace(NTriples.fromStrings(spark, redirectsNt), ns)
-    val disambigs = NTriples.stripNamespace(NTriples.fromStrings(spark, disambiguationsNt), ns)
-    val instanceTypes = NTriples.stripNamespace(NTriples.fromStrings(spark, instanceTypesNt), ns)
-      .withColumn("obj", regexp_replace(
-        regexp_replace(col("obj"), "http://dbpedia.org/ontology/", "DBpedia:"),
-        "http://schema.org/", "Schema:"))
-
-    val paragraphs = st("paragraphs") {
-      Extractor.paragraphs(Extractor.extracted(pages)).toDF()
-    }.as[ParagraphRow].cache()
-
-    val occurrences = st("occurrences") {
-      Extractor.occurrences(pages).toDF()
-    }.as[OccurrenceRow].cache()
-
-    val closure = st("redirect_closure") {
-      ModelBuild.redirectClosure(redirects)
-    }.cache()
-
-    val resolved = st("resolved_occurrences") {
-      ModelBuild.resolvedOccurrences(occurrences, closure, disambigs)
-    }.cache()
-
-    val surfaceForms = st("surface_forms") {
-      val firstPass = ModelBuild.surfaceForms(occurrences, None)
-      val bc = spark.sparkContext.broadcast(
-        Spotter.buildAutomaton(firstPass, minAnnotationProbability = 0.0))
-      val withTotals = ModelBuild.surfaceForms(
-        occurrences, Some(Spotter.totalCounts(paragraphs, bc))).cache()
-      ModelBuild.ngramTotalCorrection(withTotals).toDF()
-    }.as[SurfaceFormRow].cache()
-
-    val resources = st("resources") {
-      ModelBuild.resources(resolved, instanceTypes).toDF()
-    }.as[ResourceRow].cache()
-
-    val candCommitted = Pipeline.isCommitted(s"$root/candidates")
-    val candidates = bucketed("candidates",
-      st("candidates") {
-        ModelBuild.candidates(resolved, surfaceForms, resources).toDF()
-      }, "sf_id", candCommitted).as[CandidateRow].cache()
-
-    val tokenTypes = st("token_types") {
-      ModelBuild.tokenTypes(paragraphs, surfaceForms).toDF()
-    }.as[TokenTypeRow].cache()
-
-    val ctxCommitted = Pipeline.isCommitted(s"$root/entity_contexts")
-    val entityContexts = bucketed("entity_contexts",
-      st("entity_contexts") {
-        ModelBuild.entityContexts(resolved, resources, tokenTypes).toDF()
-      }, "res_id", ctxCommitted).as[EntityContextRow].cache()
-
-    val totals = ModelBuild.totals(surfaceForms, resources, tokenTypes)
-    val model = Model(paragraphs, occurrences, closure, surfaceForms,
-      resources, candidates, tokenTypes, entityContexts, totals)
+    val (model, resolved) = Annotate.modelDag(spark, pages, redirectsNt, disambiguationsNt,
+      instanceTypesNt, withTotalCounts = true, graft.util.TextUtil.IdentityStemmer,
+      staged(spark, root, buckets))
 
     // F1 training as a model stage: simThresholds = ascending quantiles
     // of gold-correct similarity scores over the model's own corpus (the
     // artifact the reference ships as config.getSimilarityThresholds).
     // Persisted like any other model table, so a resumed run loads it
     // instead of re-running the scored DAG.
-    val scoredDf = Annotate.scored(spark, model).cache()
+    val scoredDf = Annotate.scoredOn(spark, model, model.paragraphs).cache()
     val simThresholds = st("sim_thresholds") {
       val ts = graft.filter.AnnotationFilters.trainSimThresholds(
-        graft.disambig.Disambiguator.best(scoredDf), resolved.toDF())
+        graft.disambig.Disambiguator.best(scoredDf), resolved)
       ts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("quantile_idx", "threshold")
     }
     val thresholdsSeq = simThresholds.orderBy("quantile_idx")
@@ -149,9 +102,13 @@ object Runner {
     val annotations = st("annotations") {
       Annotate.annotationsFrom(spark, scoredDf, simThresholds = thresholdsSeq).toDF()
     }.as[AnnotationRow]
+    // annotations is committed: nothing reads the scored table or the
+    // training gold again, so only the model's own tables stay cached
+    scoredDf.unpersist()
+    resolved.unpersist()
 
     val triples = st("triples") {
-      Triples.all(annotations, resources, closure).toDF()
+      Triples.all(annotations, model.resources, model.closure).toDF()
     }
 
     // Every stage is committed and parquet-backed: the run's reliable

@@ -108,8 +108,7 @@ object StreamingAnnotate {
    * over the batch's own paragraphs; that state is per-batch by
    * definition, so no cross-batch watermarking is needed and results
    * equal the batch annotator on the same pages, asserted in
-   * StreamingSpec). The broadcast automaton is built ONCE on the driver
-   * and reused across micro-batches.
+   * StreamingSpec).
    */
   def annotateStream(pages: Dataset[WebPage], m: graft.pipeline.Model)
                     (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
@@ -118,21 +117,18 @@ object StreamingAnnotate {
     }
 
   /** The shared micro-batch scoring loop behind [[annotateStream]] and
-    * [[tripleStream]]: one driver-built broadcast automaton reused
-    * across batches, each batch running extract → spot → the full batch
+    * [[tripleStream]]: each batch runs extract → spot → the full batch
     * scoring dataflow; `emit` decides what leaves the batch. */
   private def scoredBatches(pages: Dataset[WebPage], m: graft.pipeline.Model)
                            (emit: (org.apache.spark.sql.SparkSession, DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = pages.sparkSession
-    val bc = spark.sparkContext.broadcast(
-      graft.spot.Spotter.buildAutomaton(m.surfaceForms))
     pages.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[WebPage], batchId: Long) =>
         val paras = graft.extract.Extractor.paragraphs(
           graft.extract.Extractor.extracted(batch))
-        val scored = graft.pipeline.Annotate.scoredOn(spark, m, paras, automaton = Some(bc))
+        val scored = graft.pipeline.Annotate.scoredOn(spark, m, paras)
         emit(spark, scored, batchId)
       }
       .start()

@@ -64,6 +64,77 @@ class RunnerSpec extends AnyFunSuite {
       "reliable checkpoints must be cleaned up after a successful run")
   }
 
+  test("a cold run leaves only the returned model's tables cached") {
+    val before = org.apache.spark.sql.CacheEntries.count(spark)
+    val m = runAll(Files.createTempDirectory("graft_cache").toString).model
+    val tables = Seq(m.paragraphs, m.occurrences, m.closure, m.surfaceForms,
+      m.resources, m.candidates, m.tokenTypes, m.entityContexts)
+    tables.foreach(t => assert(t.storageLevel.useMemory, s"model table not cached: $t"))
+    tables.foreach(_.unpersist())
+    assert(org.apache.spark.sql.CacheEntries.count(spark) === before,
+      "the run left intermediate datasets cached beyond its model tables")
+  }
+
+  test("a fresh process resumes a root whose bucketed tables the catalog lacks") {
+    val root = Files.createTempDirectory("graft_xproc").toString
+    val triples1 = runAll(root).triples.collect().toSet
+    // a new JVM starts with an empty in-memory catalog but finds each
+    // bucketed table's warehouse directory still on disk: copy the
+    // directory aside, drop the table (which deletes it), put it back
+    val db = spark.catalog.getDatabase(spark.catalog.currentDatabase)
+    val aside = Files.createTempDirectory("graft_xproc_aside")
+    for (stage <- Seq("candidates", "entity_contexts")) {
+      val table = Pipeline.bucketedTableName(root, stage)
+      val dir = new java.io.File(new java.net.URI(db.locationUri).getPath, table)
+      assert(dir.isDirectory, s"no warehouse dir for $table")
+      val copy = aside.resolve(table).toFile
+      org.apache.commons.io.FileUtils.copyDirectory(dir, copy)
+      spark.sql(s"DROP TABLE $table")
+      org.apache.commons.io.FileUtils.copyDirectory(copy, dir)
+    }
+    Seq("sim_thresholds", "annotations", "triples")
+      .foreach(s => Pipeline.invalidate(s"$root/$s"))
+    val triples2 = runAll(root).triples.collect().toSet
+    assert(triples2 === triples1)
+  }
+
+  test("in-memory and staged holds build the same model, stemmed or not") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.pipeline.{Annotate, Model}
+    import graft.util.{PorterStemmer, TextUtil}
+    def build(stemmer: TextUtil.Stemmer, hold: Annotate.Hold): Model =
+      Annotate.modelDag(spark, SyntheticCorpus.webPages(spark, 40),
+        SyntheticCorpus.redirectsNt, SyntheticCorpus.disambiguationsNt,
+        SyntheticCorpus.instanceTypesNt, withTotalCounts = true, stemmer, hold)._1
+    /** Each model table as a row multiset, columns in name order. */
+    def rows(m: Model): Seq[(String, Map[Seq[Any], Int])] = Seq[(String, DataFrame)](
+      "paragraphs" -> m.paragraphs.toDF(), "occurrences" -> m.occurrences.toDF(),
+      "redirect_closure" -> m.closure, "surface_forms" -> m.surfaceForms.toDF(),
+      "resources" -> m.resources.toDF(), "candidates" -> m.candidates.toDF(),
+      "token_types" -> m.tokenTypes.toDF(), "entity_contexts" -> m.entityContexts.toDF()
+    ).map { case (name, df) =>
+      name -> df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSeq
+        .map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    }
+    val byStemmer = Seq[(String, TextUtil.Stemmer)](
+      "identity" -> TextUtil.IdentityStemmer, "porter" -> PorterStemmer.stem
+    ).map { case (label, stemmer) =>
+      val inMemory = build(stemmer, Annotate.inMemory)
+      val staged = build(stemmer,
+        Runner.staged(spark, Files.createTempDirectory(s"graft_hold_$label").toString, 32))
+      val stagedRows = rows(staged)
+      rows(inMemory).zip(stagedRows).foreach { case ((name, a), (_, b)) =>
+        assert(a.nonEmpty, s"$label: $name is empty")
+        assert(a === b, s"$label: $name differs between the hold policies")
+      }
+      assert(inMemory.totals === staged.totals, s"$label: totals differ")
+      label -> stagedRows.toMap
+    }.toMap
+    // the stemmer reached the staged build's token dictionary
+    assert(byStemmer("identity")("token_types") !== byStemmer("porter")("token_types"))
+  }
+
   test("a second run on a different root checkpoints under ITS OWN root") {
     val rootA = Files.createTempDirectory("graft_ckpt_a").toString
     val rootB = Files.createTempDirectory("graft_ckpt_b").toString
